@@ -19,7 +19,7 @@ Scale shape: training is driver-side numpy over a CAPPED sample
 (constant cost in corpus size — same policy as ivf_build's quantizer);
 encoding is one vectorized mapInPandas scan (GEMM per subspace);
 search broadcasts the per-query LUTs (nq x m x k doubles — driver-small
-query regime, same documented contract as cosine_topk_gemm) and scans
+query regime, same documented contract as cosine_topk) and scans
 ONLY the code relation with per-partition top-k partials, so the full
 corpus of raw vectors is never touched at query time.
 """
@@ -159,7 +159,7 @@ def pq_topk(
     is :func:`pq_encode` output (or the persisted table).
 
     The query set collects to the driver ONCE (documented driver-small
-    regime, as cosine_topk_gemm) and becomes per-query lookup tables
+    regime, as cosine_topk) and becomes per-query lookup tables
     LUT[q][j][c] = ||q_subj - C[j][c]||^2, broadcast with the task
     closure; each Arrow batch of codes then scores ALL queries with m
     fancy-indexed adds — C speed, bytes read = the code table only.
@@ -314,9 +314,8 @@ def pq_topk_blocked(
     :func:`pq_topk` collects the query set once (driver-small regime)
     and broadcasts per-query LUTs in the task closure; that collapses
     when queries are themselves a corpus (kNN-graph construction over
-    compressed vectors). This operator applies the
-    :func:`~iot_sensor_data_pipeline_spark.operators.similarity.cosine_topk_blocked`
-    block scheme to the ADC scan: hash-block both sides, replicate
+    compressed vectors). This operator applies a block outer-product
+    scheme to the ADC scan: hash-block both sides, replicate
     queries to each of ``c_blocks`` and codes to each of ``q_blocks``
     (shuffle volume |Q|*CB + |C|*QB rows — the standard block
     outer-product cost, and the code side ships m SMALL INTS per row,
@@ -348,8 +347,8 @@ def pq_topk_blocked(
     qprep = queries.select(
         F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
     )
-    # (qb, cb) int on BOTH sides (as cosine_topk_blocked): cogroup key
-    # matching never depends on cross-side implicit coercion
+    # (qb, cb) int on BOTH sides: cogroup key matching never depends
+    # on cross-side implicit coercion (version-fragile)
     q = qprep.withColumn(
         "qb", F.pmod(F.xxhash64("qid"), F.lit(q_blocks)).cast("int")
     ).withColumn("cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)])))

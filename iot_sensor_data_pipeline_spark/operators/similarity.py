@@ -1,59 +1,226 @@
 """Similarity search over embedding columns (array<float>).
 
 Two tiers:
-- ``cosine_topk`` — exact brute force: query x corpus join with a
-  JVM-side fold for the dot product. The baseline, and the verifier
-  for the approximate path. O(|Q| x |C|): fine when either side is
-  small (or broadcast); never the 100 TB path.
-- ``rp_lsh_topk`` — random-hyperplane LSH: r signed projections ->
-  one bucket id per vector -> candidates = bucket collisions ->
-  exact cosine re-rank of candidates only. The scale path: the
-  corpus-side work collapses from |C| to the colliding buckets, and
-  the join is a plain shuffle on the bucket key. Multi-probe (flip
-  one bit) trades compute for recall.
+- ``cosine_topk`` — exact brute force: every corpus partition scores
+  its rows against the driver-collected query matrix where it is
+  read. The baseline, and the verifier for the approximate paths.
+  O(|Q| x |C|): fine when the query side is small; never the 100 TB
+  path.
+- ``rp_lsh_topk`` / ``ivf_topk`` — random-hyperplane LSH and IVF:
+  candidates come from bucket or centroid collisions, and only they
+  are scored exactly. The scale path: the corpus-side work collapses
+  from |C| to the colliding buckets, and the join is a plain shuffle
+  on the bucket key. Multi-probe (flip one bit, probe more centroids)
+  trades compute for recall.
 
-Vector math is F.zip_with / F.aggregate over array<double> — codegen'd
-fold, no Python, deterministic left-to-right summation (matches the
-oracle's sequential list_dot_product).
+Every pair score here comes from ONE numpy kernel, :func:`cosine_tile`.
+It scores an (n, d) block against an (m, d) block in a fixed operation
+order: a left-to-right dot product, norms that are square roots of
+left-to-right sums of squares, and ``dot / (na * nb)``. That is the
+order of the oracles' sequential ``list_dot_product``, so the raw
+doubles are the same wherever a pair is scored. Pairs are always scored
+as tiles (a corpus batch against the query matrix, a hash block
+against a hash block, the rows of one join key against each other),
+never as single joined rows: the Python boundary is crossed once per
+tile, not once per pair. Thresholds compare the raw score; output
+scores are rounded by Spark's ``F.round`` (HALF_UP on the decimal
+value — ``np.round`` rounds half-even on the binary value).
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: scores per kernel call. A tile's left block is scored in row chunks
+#: against its whole right block, so a chunk's accumulator (512 KiB of
+#: doubles) stays in cache through the d-step loop, and a tile's memory
+#: is bounded however large its blocks grow. (500 x 2000 dim-64 pairs
+#: on one core of a 4-core x86 host: 6.3M pairs/s at 2^16 cells,
+#: 4.7M/s at 2^22.)
+_TILE_CELLS = 1 << 16
 
 
 def as_double_array(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+def row_norms(X: np.ndarray) -> np.ndarray:
+    """L2 norm of each row of an (n, d) float64 matrix: the square root
+    of a LEFT-TO-RIGHT sum of squares. ``np.cumsum`` is sequential;
+    ``np.sum``, ``np.linalg.norm`` and BLAS sum pairwise or blocked,
+    which drifts in the last ulp from the oracles' sequential
+    ``list_dot_product``."""
+    if X.shape[1] == 0:
+        return np.zeros(len(X))
+    return np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+
+
+def _l2_kernel(v):  # pd.Series -> pd.Series; hints omitted — inference
+    # rejects the stringized hints `from __future__ import
+    # annotations` produces, so the Series contract lives here.
+    # The L2 norm of each vector of an Arrow batch, for pandas_udf. A
+    # fixed-dim batch (the embedding-table case) is one row_norms call;
+    # a ragged one sums each segment with np.add.reduceat, whose simple
+    # per-segment loop is sequential too (fresh per segment).
+    if len(v) == 0:
+        return pd.Series(np.zeros(0))
+    lens = v.map(len).to_numpy(dtype="int64")
+    if lens.min() == lens.max():
+        return pd.Series(row_norms(_matrix(v)))
+    sq = np.square(np.concatenate([np.asarray(x, dtype="float64") for x in v]))
+    # zero-length segments: pad sq with one trailing 0.0 so every raw
+    # offset (max = sum(lens)) is in range — clamping instead would
+    # fold a trailing empty segment's boundary into the previous
+    # segment and truncate its sum. reduceat returns sq[offset] for
+    # equal successive offsets — masked by the where.
+    offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    sums = np.add.reduceat(np.append(sq, 0.0), offsets)
+    return pd.Series(np.sqrt(np.where(lens > 0, sums, 0.0)))
+
+
+def cosine_tile(A: np.ndarray, B: np.ndarray, a_ids, b_ids) -> np.ndarray:
+    """The engine's one pair-scoring kernel: the raw cosine of every row
+    of the (n, d) float64 block ``A`` against every row of the (m, d)
+    block ``B``, as an (n, m) matrix.
+
+    The dot product accumulates left to right over d, each norm is
+    :func:`row_norms`, and the score is ``dot / (na * nb)``, so a pair's
+    score is bit-identical in every tile shape. A zero-norm row raises,
+    naming its id (``a_ids``/``b_ids`` label the rows): its cosine is
+    undefined, and a NaN would sort above every score in a descending
+    rank."""
+    na, nb = row_norms(A), row_norms(B)
+    for ids, norms in ((a_ids, na), (b_ids, nb)):
+        zero = np.flatnonzero(norms == 0)
+        if zero.size:
+            raise ValueError(f"cosine: zero-norm vector, id {ids[zero[0]]}")
+    Bt = np.ascontiguousarray(B.T)
+    acc = np.zeros((len(A), len(B)))
+    prod = np.empty_like(acc)
+    for t in range(A.shape[1]):
+        acc += np.multiply(A[:, t, None], Bt[t], out=prod)
+    return acc / (na[:, None] * nb[None, :])
+
+
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    """An Arrow batch's array column as an (n, d) float64 matrix (float
+    elements widen exactly)."""
+    return np.stack(vectors.to_numpy()).astype(np.float64, copy=False)
+
+
+def _score_tile(a_ids, A, b_ids, B, keep):
+    """Score block ``A`` against block ``B`` in row chunks of at most
+    ``_TILE_CELLS`` scores and keep the cells ``keep(S, a, b)`` marks
+    (``a`` is a column and ``b`` a row of ids, broadcast against the
+    scores ``S``). Returns the kept (a id, b id, raw score) arrays."""
+    step = max(1, _TILE_CELLS // max(len(b_ids), 1))
+    parts = [(a_ids[:0], b_ids[:0], np.zeros(0))]
+    for s in range(0, len(a_ids), step):
+        a = a_ids[s : s + step]
+        S = cosine_tile(A[s : s + step], B, a, b_ids)
+        r, c = np.nonzero(keep(S, a[:, None], b_ids[None, :]))
+        parts.append((a[r], b_ids[c], S[r, c]))
+    return [np.concatenate(x) for x in zip(*parts)]
+
+
+def _pairs_at_least(threshold: float):
+    """Keep rule for pair sets: raw score >= ``threshold``, each
+    unordered pair once. A pair whose right id is also a left row of
+    the tile (a self tile) is kept only as i < j; any other pair as
+    it is."""
+
+    def rule(a_ids, b_ids):
+        foreign = ~np.isin(b_ids, a_ids)
+        return lambda S, a, b: (S >= threshold) & ((a < b) | foreign)
+
+    return rule
+
+
+def _not_self(a_ids, b_ids):
+    """Keep rule for probe tiles: every pair but a vector with itself."""
+    return lambda S, a, b: a != b
+
+
+def _topk_cut(k: int, round_score: int):
+    """Keep rule for top-k: self-pairs go, and each left row keeps every
+    candidate within two rounding steps of its k-th best raw score. Two
+    raws more than one step apart never round to one value, so no
+    dropped candidate can tie into the rank window's top k (the second
+    step covers the binary/decimal edges of the rounding bins)."""
+    margin = 2 * 10.0**-round_score
+
+    def keep(S, a, b):
+        cand = a != b
+        m = S.shape[1]
+        if m <= k:
+            return cand
+        kth = np.partition(np.where(cand, S, -np.inf), m - k, axis=1)[:, m - k]
+        return cand & (S >= kth[:, None] - margin)
+
+    return keep
+
+
+def _keyed_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    key,
+    a: tuple[str, str],
+    b: tuple[str, str],
+    rule,
+) -> DataFrame:
+    """Score every (left, right) row pair that shares ``key`` (a column
+    name or list of names): one kernel tile per key value, through
+    ``cogroup().applyInPandas``. ``a`` and ``b`` name each side's (id,
+    vector) columns; ``rule(a_ids, b_ids)`` builds a tile's keep rule.
+    Returns (a id, b id, raw ``score``), ids in their own types. Both
+    sides shuffle on the key unless already partitioned by it: a
+    bucketed index table is read without an exchange."""
+    keys = [key] if isinstance(key, str) else list(key)
+    (ia, va), (ib, vb) = a, b
+    schema = T.StructType(
+        [
+            T.StructField(ia, left.schema[ia].dataType),
+            T.StructField(ib, right.schema[ib].dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+
+    def tile(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if lpdf.empty or rpdf.empty:
+            return pd.DataFrame({ia: [], ib: [], "score": []})
+        a_ids, b_ids = lpdf[ia].to_numpy(), rpdf[ib].to_numpy()
+        got = _score_tile(
+            a_ids, _matrix(lpdf[va]), b_ids, _matrix(rpdf[vb]), rule(a_ids, b_ids)
+        )
+        return pd.DataFrame(dict(zip((ia, ib, "score"), got)))
+
+    # fresh key aliases per side: a self tile (the same relation on
+    # both sides) would otherwise group on ambiguous attributes
+    tag = [F.col(k).alias(f"__k{n}") for n, k in enumerate(keys)]
+    grouped = [f"__k{n}" for n in range(len(keys))]
+    return (
+        left.select(*tag, ia, va)
+        .groupBy(*grouped)
+        .cogroup(right.select(*tag, ib, vb).groupBy(*grouped))
+        .applyInPandas(tile, schema)
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def _staged_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` with the per-side norms STAGED: every pair-scoring
-    site in this module attaches ``l2_norm`` to each side's projection
-    (one interpreted fold per input row) and scores pairs with a
-    single dot fold plus one multiply/divide — instead of re-walking
-    both arrays three times per pair. Bit-identical to :func:`cosine`
-    (same folds in the same order, evaluated once and reused), so
-    every hash-checked consumer is unchanged; higher-order folds are
-    interpreted, which is why per-pair re-evaluation is the dominant
-    cost of the brute-force scorers (r15: 3 folds -> 1 per pair)."""
-    return dot(va, vb) / (na * nb)
+def _rank(pairs: DataFrame, k: int, round_score: int) -> DataFrame:
+    """(qid, nid, raw score) -> each query's top k by rounded score,
+    ties broken by nid: (qid, nid, score, rn)."""
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
+    return (
+        pairs.withColumn("score", F.round("score", round_score))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+    )
 
 
 def cosine_topk(
@@ -64,7 +231,6 @@ def cosine_topk(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     round_score: int = 6,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine. Output:
     (qid, nid, score, rn), self-matches excluded, ties broken by nid.
@@ -72,32 +238,47 @@ def cosine_topk(
     The ranking orders by the ROUNDED score so results are stable
     across engines and runs; rn is a row_number (exactly k rows/query).
 
-    ``broadcast_queries`` ships the (small) query set to every
-    executor so the big corpus never shuffles — the right plan when
-    |Q| << |C|, which is the only regime brute force is for.
+    The query set collects to the driver ONCE (|Q| x dim: queries must
+    be driver-small, the only regime brute force is for) and ships in
+    the task closure. Each corpus Arrow batch is scored against the
+    whole query matrix by :func:`cosine_tile` where it is read, so the
+    corpus never shuffles. A tie-safe local cut keeps about k rows per
+    query per batch, and a global rank window merges them: the
+    per-partition top-k plus merge of "Incremental Based Framework for
+    Efficient Top-K Similarity Search in Interactive Data Analysis
+    Sessions" (EDBT 2020).
     """
-    q = queries.select(
-        F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
-    ).select("qid", "qv", l2_norm(F.col("qv")).alias("__qn"))
-    c = corpus.select(
-        F.col(corpus_id).alias("nid"), as_double_array(F.col(vec_col)).alias("cv")
-    ).select("nid", "cv", l2_norm(F.col("cv")).alias("__cn"))
-    pairs = (
-        (c.crossJoin(F.broadcast(q)) if broadcast_queries else q.crossJoin(c))
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                _staged_cosine(
-                    F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
-                ),
-                round_score,
-            ).alias("score"),
-        )
+    rows = queries.select(query_id, vec_col).collect()
+    qids = np.array([r[0] for r in rows])
+    qm = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    keep = _topk_cut(k, round_score)
+    schema = T.StructType(
+        [
+            T.StructField("qid", queries.schema[query_id].dataType),
+            T.StructField("nid", corpus.schema[corpus_id].dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
     )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
+
+    def batches(it):
+        for pdf in it:
+            if len(pdf) and len(qids):
+                got = _score_tile(
+                    qids, qm, pdf["nid"].to_numpy(), _matrix(pdf["cv"]), keep
+                )
+                yield pd.DataFrame(dict(zip(("qid", "nid", "score"), got)))
+
+    partial = corpus.select(
+        F.col(corpus_id).alias("nid"), F.col(vec_col).alias("cv")
+    ).mapInPandas(batches, schema)
+    return _rank(partial, k, round_score)
+
+
+def _n_blocks(spark) -> int:
+    """Hash blocks per side for the exact all-pairs self-join: the
+    B(B+1)/2 tiles of the upper block triangle outnumber the session's
+    cores about twice over."""
+    return math.ceil(math.sqrt(4 * spark.sparkContext.defaultParallelism))
 
 
 def cosine_near_dup_pairs(
@@ -111,15 +292,22 @@ def cosine_near_dup_pairs(
     dim: int | None = None,
     max_bucket_freq: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (i < j, score >= threshold).
+    """Embedding-cosine near-duplicate pairs (i < j, cosine >=
+    threshold). The threshold compares the raw cosine; ``score`` is
+    rounded to ``round_score`` places.
 
     ``n_planes=None`` -> exact all-pairs (quadratic; oracle/verification
-    path). With ``n_planes`` set, candidates come from RP-LSH collisions
-    across ``n_tables`` INDEPENDENT hash tables (the classic L-tables
-    amplification: per-pair miss probability (1-p)^L) plus 1-bit
-    multi-probe per table; only candidates are scored. For threshold-
-    similarity pairs (theta around 60-66 deg at t=0.4) a single table
-    recalls ~30%; 6 tables push past ~85%.
+    path): rows hash into B blocks, and each tile of the upper block
+    triangle — block bi against block bj >= bi — is one kernel call,
+    so every unordered pair is scored exactly once and nothing
+    shuffles but B+1 copies of each vector. With ``n_planes`` set,
+    candidates come from RP-LSH collisions across ``n_tables``
+    INDEPENDENT hash tables (the classic L-tables amplification:
+    per-pair miss probability (1-p)^L) plus 1-bit multi-probe per
+    table; each (table, bucket) is one tile, and a pair colliding in
+    several is kept once. For threshold-similarity pairs (theta around
+    60-66 deg at t=0.4) a single table recalls ~30%; 6 tables push past
+    ~85%.
 
     ``dim`` (the vector dimensionality) is required with ``n_planes``:
     hyperplanes are generated driver-side from it, keeping the operator
@@ -130,39 +318,38 @@ def cosine_near_dup_pairs(
     of MinHash's ``max_shingle_freq`` / SimHash's ``max_chunk_freq``):
     a (table, bucket) holding more than that many vectors — a dense
     cluster or a duplicated embedding — is dropped from candidate
-    generation in EVERY table it floods, bounding the self-join.
+    generation in EVERY table it floods, bounding the tile.
     RECALL CONSEQUENCE: pairs colliding ONLY in dropped buckets are
     lost; a pair also colliding in any surviving table is unaffected
     (and a cluster dense enough to flood all tables is better handled
     by exact dedup first). The bucket space is n_tables x 2^n_planes,
     so the frequency relation stays broadcast-small at any corpus
-    size. Note scoring is NOT the scale hazard here — the codegen'd
-    fold scores ~300k pairs/s/core (measured; an Arrow GEMM scorer is
-    no faster at dim 64) — bucket blowup is.
+    size. Scoring is not the scale hazard here — the kernel scores
+    about 6M dim-64 pairs per second per core, 20x the interpreted
+    fold it replaced — bucket blowup is.
     """
-    e = df.select(
-        F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")
-    ).select("id", "v", l2_norm(F.col("v")).alias("n"))
-    a = e.select(
-        F.col("id").alias("i"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = e.select(
-        F.col("id").alias("j"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
+    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if n_planes is None:
-        # spread the quadratic pair work: the streamed side of the
-        # broadcast nested-loop join inherits the SCAN's partitioning,
-        # and a small corpus (one parquet row group) otherwise scores
-        # every |C|^2/2 pair in ONE task (measured 11.7 s single-task
-        # at 2k x 2k, dim 64). Hash-repartitioning |C| id-keyed rows is
-        # noise next to the pair work it parallelizes; never shrink a
-        # scan that is already wider than the session's parallelism.
-        n_part = max(
-            a.sparkSession.sparkContext.defaultParallelism,
-            a.rdd.getNumPartitions(),
+        n = _n_blocks(df.sparkSession)
+        block = F.pmod(F.xxhash64("id"), F.lit(n)).cast("int")
+        grid = F.explode(F.array(*[F.lit(b) for b in range(n)]))
+        left = e.select(
+            F.col("id").alias("i"), F.col("v").alias("va"),
+            block.alias("bi"), grid.alias("bj"),
         )
-        pairs = a.repartition(n_part, "i").crossJoin(b).where(
-            F.col("i") < F.col("j")
+        right = e.select(
+            F.col("id").alias("j"), F.col("v").alias("vb"),
+            grid.alias("bi"), block.alias("bj"),
+        )
+        upper = F.col("bi") <= F.col("bj")
+        tiles = _keyed_pairs(
+            left.where(upper), right.where(upper), ["bi", "bj"],
+            ("i", "va"), ("j", "vb"), _pairs_at_least(threshold),
+        )
+        # an off-diagonal tile keeps every pair in its own (bi, bj)
+        # order; the kernel is symmetric, so only the ids need ordering
+        pairs = tiles.select(
+            F.least("i", "j").alias("i"), F.greatest("i", "j").alias("j"), "score"
         )
     else:
         if dim is None:
@@ -179,25 +366,23 @@ def cosine_near_dup_pairs(
             (_bucket_expr(F.col("v"), planes) + F.lit(t * (2**n_planes))).alias(f"b{t}")
             for t, planes in enumerate(table_planes)
         ]
-        # candidate generation carries ONLY 8-byte ids: the probe
-        # explode/join/distinct never touch the vectors (VERDICT r04
-        # #2 — shipping (i, j, va, vb) through the distinct shuffled
-        # 2 x dim doubles per candidate; at embedding scale that
-        # exchange dominates). Vectors re-join onto the deduped (i, j)
-        # pairs afterwards — two narrow equi-joins on id.
-        bucketed = e.select("id", *buckets)
+        bucketed = e.select("id", "v", *buckets)
         probe_cols = []
         for t in range(n_tables):
             probe_cols.append(F.col(f"b{t}"))
             probe_cols.extend(
                 F.col(f"b{t}").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)
             )
+        # a vector's own buckets are among its probes, so every right
+        # row of a tile is also a left row: the keep rule reduces to
+        # i < j, and Hamming-1 collisions are symmetric, so each
+        # candidate pair is scored in some tile as (min id, max id)
         left = bucketed.select(
-            F.col("id").alias("i"),
+            F.col("id").alias("i"), F.col("v").alias("va"),
             F.explode(F.array(*probe_cols)).alias("probe"),
         )
         right = bucketed.select(
-            F.col("id").alias("j"),
+            F.col("id").alias("j"), F.col("v").alias("vb"),
             F.explode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias("probe"),
         )
         if max_bucket_freq is not None:
@@ -209,38 +394,11 @@ def cosine_near_dup_pairs(
             ok = freq.where(F.col("__f") <= max_bucket_freq).select("probe")
             left = left.join(F.broadcast(ok), "probe", "left_semi")
             right = right.join(F.broadcast(ok), "probe", "left_semi")
-        cand = (
-            left.join(right, "probe")
-            .where(F.col("i") < F.col("j"))
-            .select("i", "j")
-            .distinct()
-        )
-        pairs = cand.join(
-            e.select(
-                F.col("id").alias("i"), F.col("v").alias("va"),
-                F.col("n").alias("na"),
-            ),
-            "i",
-        ).join(
-            e.select(
-                F.col("id").alias("j"), F.col("v").alias("vb"),
-                F.col("n").alias("nb"),
-            ),
-            "j",
-        )
-    return (
-        pairs.select(
-            "i",
-            "j",
-            F.round(
-                _staged_cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                round_score,
-            ).alias("score"),
-        )
-        .where(F.col("score") >= threshold)
-    )
+        pairs = _keyed_pairs(
+            left, right, "probe", ("i", "va"), ("j", "vb"),
+            _pairs_at_least(threshold),
+        ).distinct()
+    return pairs.withColumn("score", F.round("score", round_score))
 
 
 def _nearest_centroids_udf(centroids, n: int):
@@ -249,8 +407,6 @@ def _nearest_centroids_udf(centroids, n: int):
     literals, no shuffle), and each Arrow batch is one numpy GEMM:
     d = |x|^2 - 2 x.C^T + |c|^2. Stable argsort ties break by centroid
     id — the module's documented (distance, cid) contract."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype="float64")  # (m, dim)
@@ -375,43 +531,23 @@ def ivf_probe(
     round_score: int = 6,
 ) -> DataFrame:
     """Probe a built IVF index: assign each query to its ``n_probe``
-    nearest centroids, join the corresponding posting lists, exact
-    cosine re-rank. ``assignments``/``centroids`` come from
-    :func:`ivf_build` (the assignments side may be a bucketed table —
-    the join key cid is cast int on both sides, so bucketed scans
-    match without cross-side coercion)."""
+    nearest centroids, score each probed posting list against its
+    queries as one kernel tile, rank. ``assignments``/``centroids``
+    come from :func:`ivf_build` (the assignments side may be a bucketed
+    table — the cogroup key cid is cast int on both sides, so bucketed
+    scans match without cross-side coercion)."""
     _, assign_probe = _centroid_assigners(centroids, n_probe)
     q = (
         queries.select(
             F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
         )
-        .select(
-            "qid", "qv", l2_norm(F.col("qv")).alias("__qn"),
-            F.explode(assign_probe(F.col("qv"))).alias("cid"),
-        )
+        .select("qid", "qv", F.explode(assign_probe(F.col("qv"))).alias("cid"))
         .withColumn("cid", F.col("cid").cast("int"))
     )
-    # the posting-side norm stages ONCE PER POSTING ROW (a projection
-    # over the — possibly bucketed — assignments scan preserves its
-    # partitioning), instead of once per (query, posting) pair
-    postings = assignments.withColumn("__cn", l2_norm(F.col("cv")))
-    pairs = (
-        q.join(postings, "cid")
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                _staged_cosine(
-                    F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
-                ),
-                round_score,
-            ).alias("score"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
+    pairs = _keyed_pairs(
+        q, assignments, "cid", ("qid", "qv"), ("nid", "cv"), _not_self
+    ).distinct()
+    return _rank(pairs, k, round_score)
 
 
 def ivf_topk(
@@ -445,96 +581,6 @@ def ivf_topk(
         queries, assignments, centroids, k, n_probe=n_probe,
         query_id=query_id, vec_col=vec_col, round_score=round_score,
     )
-
-
-def _topk_partial_schema():
-    """(qid, nid, score) Arrow schema shared by the GEMM paths."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-
-def _local_topk_frame(qids, qm_norm, nids, cm_norm, k, round_score):
-    """Shared local-selection kernel for the GEMM paths: rounded-score
-    lexsort (score desc, nid asc — IDENTICAL to the global rank
-    window, so ties survive the local cut) and a k+1 take absorbing at
-    most one self-match. ONE copy of the tie-break semantics keeps
-    cosine_topk_gemm and cosine_topk_blocked equality-pinned to
-    cosine_topk by construction."""
-    import numpy as np
-    import pandas as pd
-
-    scores = np.round(qm_norm @ cm_norm.T, round_score)
-    take = min(k + 1, scores.shape[1])
-    order = np.lexsort((np.broadcast_to(nids, scores.shape), -scores), axis=1)
-    idx = order[:, :take]
-    return pd.DataFrame(
-        {
-            "qid": np.repeat(qids, take),
-            "nid": nids[idx.ravel()],
-            "score": np.take_along_axis(scores, idx, axis=1).ravel(),
-        }
-    )
-
-
-def cosine_topk_gemm(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id: str = "vec_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    round_score: int = 6,
-) -> DataFrame:
-    """Exact top-k via per-partition matrix multiply (mapInPandas).
-
-    The query set collects to the driver ONCE as a normalized numpy
-    matrix (|Q| x dim — queries must be driver-small, same regime as
-    broadcast), ships inside the closure, and every corpus partition
-    computes scores as ONE BLAS GEMM + argpartition — orders of
-    magnitude fewer interpreter ops than per-row folds when |Q| is in
-    the hundreds+. Per-partition local top-k (k rows per query per
-    partition) then a global rank window finishes the merge, so the
-    shuffle carries k*P rows per query, not |C|.
-
-    Equality with cosine_topk is pinned in tests (same rounding, same
-    tie-break — the local selection orders by the rounded score too).
-    Ids must be integral (the Arrow schema pins them to long); use
-    cosine_topk for string-keyed vectors.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = queries.select(
-        F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
-    ).collect()
-    qids = np.array([r.qid for r in q_rows])
-    qm = np.array([r.qv for r in q_rows], dtype="float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-
-    out_schema = _topk_partial_schema()
-
-    def batches(it):
-        for pdf in it:
-            nids = pdf["nid"].to_numpy()
-            cm = np.array(list(pdf["cv"]), dtype="float64")
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            yield _local_topk_frame(qids, qm, nids, cm, k, round_score)
-
-    c = corpus.select(
-        F.col(corpus_id).cast("long").alias("nid"),
-        as_double_array(F.col(vec_col)).alias("cv"),
-    )
-    partial = c.mapInPandas(batches, out_schema).where(F.col("qid") != F.col("nid"))
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return partial.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
 def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
@@ -623,8 +669,8 @@ def rp_lsh_probe(
 ) -> DataFrame:
     """Probe a built RP-LSH index (:func:`rp_lsh_build` output, plain
     or persisted as a bucketed table): bucket each query with the SAME
-    deterministic hyperplanes, join the colliding bucket lists, exact
-    cosine re-rank. ``multi_probe`` also probes the n_planes buckets
+    deterministic hyperplanes, score each probed bucket list against
+    its queries as one kernel tile, rank. ``multi_probe`` also probes the n_planes buckets
     at hamming distance 1, boosting recall for vectors near a
     hyperplane at n_planes x candidate cost."""
     planes = _hyperplanes(dim, n_planes)
@@ -638,31 +684,11 @@ def rp_lsh_probe(
         )
     else:
         probes = F.array(F.col("q_bucket"))
-    q = q.select(
-        "qid", "qv", l2_norm(F.col("qv")).alias("__qn"),
-        F.explode(probes).alias("bucket"),
-    )
-
-    # norm staged once per index row (projection preserves a bucketed
-    # table's partitioning), not once per colliding pair
-    idx = index.withColumn("__cn", l2_norm(F.col("cv")))
-    pairs = (
-        q.join(idx, "bucket")
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                _staged_cosine(
-                    F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")
-                ),
-                round_score,
-            ).alias("score"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
+    q = q.select("qid", "qv", F.explode(probes).alias("bucket"))
+    pairs = _keyed_pairs(
+        q, index, "bucket", ("qid", "qv"), ("nid", "cv"), _not_self
+    ).distinct()
+    return _rank(pairs, k, round_score)
 
 
 def rp_lsh_topk(
@@ -697,93 +723,6 @@ def rp_lsh_topk(
     )
 
 
-def cosine_topk_blocked(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id: str = "vec_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    round_score: int = 6,
-    q_blocks: int = 8,
-    c_blocks: int = 8,
-) -> DataFrame:
-    """Exact top-k when BOTH sides are large: distributed block GEMM.
-
-    cosine_topk broadcasts the corpus rows against driver-small
-    queries; cosine_topk_gemm ships a driver-small query matrix to
-    every corpus partition. When neither side fits the driver (the
-    all-pairs kNN regime — e.g. kNN-graph construction over the whole
-    corpus), this operator hash-blocks both sides and computes one
-    BLAS GEMM per (query-block, corpus-block) tile via
-    ``cogroup().applyInPandas``:
-
-    - queries replicate to each of ``c_blocks``; corpus rows replicate
-      to each of ``q_blocks`` — shuffle volume |Q|*CB + |C|*QB rows,
-      the standard block outer-product cost, with NO driver collect
-      and no full |Q| x |C| materialization (each tile emits only
-      k rows per query).
-    - the merge window then ranks CB*k candidate rows per query.
-
-    Pick block counts so a tile's two matrices ((|Q|/QB + |C|/CB) x
-    dim doubles) fit comfortably in one task; hash blocking keeps
-    tiles balanced regardless of id distribution. Rounding and
-    tie-break match cosine_topk exactly (equality pinned in tests).
-    Ids must be integral, as in cosine_topk_gemm.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = _topk_partial_schema()
-
-    # (qb, cb) are int on BOTH sides — pmod results cast down to match
-    # the int explode literals, so cogroup key matching never depends on
-    # cross-side implicit coercion (version-fragile)
-    q = (
-        queries.select(
-            F.col(query_id).cast("long").alias("qid"),
-            as_double_array(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("qb", F.pmod(F.xxhash64("qid"), F.lit(q_blocks)).cast("int"))
-        .withColumn(
-            "cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)]))
-        )
-    )
-    c = (
-        corpus.select(
-            F.col(corpus_id).cast("long").alias("nid"),
-            as_double_array(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("cb", F.pmod(F.xxhash64("nid"), F.lit(c_blocks)).cast("int"))
-        .withColumn(
-            "qb", F.explode(F.array(*[F.lit(i) for i in range(q_blocks)]))
-        )
-    )
-
-    def tile(key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"qid": [], "nid": [], "score": []}).astype(
-                {"qid": "int64", "nid": "int64", "score": "float64"}
-            )
-        qids = qpdf["qid"].to_numpy()
-        qm = np.array(list(qpdf["qv"]), dtype="float64")
-        qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-        nids = cpdf["nid"].to_numpy()
-        cm = np.array(list(cpdf["cv"]), dtype="float64")
-        cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-        return _local_topk_frame(qids, qm, nids, cm, k, round_score)
-
-    partial = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(tile, out_schema)
-        .where(F.col("qid") != F.col("nid"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return partial.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-
-
 def semantic_dedup(
     df: DataFrame,
     threshold: float,
@@ -791,7 +730,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     n_clusters: int | None = None,
     seed: int = 42,
-    round_score: int = 6,
     max_cluster_size: int | None = None,
     max_iterations: int = 20,
 ) -> DataFrame:
@@ -835,9 +773,7 @@ def semantic_dedup(
 
     ids = df.select(F.col(id_col).alias("id"))
     if n_clusters is None:
-        pairs = cosine_near_dup_pairs(
-            df, threshold, id_col=id_col, vec_col=vec_col, round_score=round_score
-        )
+        pairs = cosine_near_dup_pairs(df, threshold, id_col=id_col, vec_col=vec_col)
     else:
         assignments, _ = ivf_build(
             df, n_centroids=n_clusters, corpus_id=id_col, vec_col=vec_col, seed=seed
@@ -846,29 +782,10 @@ def semantic_dedup(
             sizes = assignments.groupBy("cid").agg(F.count(F.lit(1)).alias("__n"))
             ok = sizes.where(F.col("__n") <= max_cluster_size).select("cid")
             assignments = assignments.join(F.broadcast(ok), "cid", "left_semi")
-        normed = assignments.withColumn("__n", l2_norm(F.col("cv")))
-        a = normed.select(
-            "cid", F.col("nid").alias("i"), F.col("cv").alias("va"),
-            F.col("__n").alias("na"),
-        )
-        b = normed.select(
-            "cid", F.col("nid").alias("j"), F.col("cv").alias("vb"),
-            F.col("__n").alias("nb"),
-        )
-        pairs = (
-            a.join(b, "cid")
-            .where(F.col("i") < F.col("j"))
-            .select(
-                "i",
-                "j",
-                F.round(
-                    _staged_cosine(
-                        F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                    ),
-                    round_score,
-                ).alias("score"),
-            )
-            .where(F.col("score") >= threshold)
+        pairs = _keyed_pairs(
+            assignments.select("cid", F.col("nid").alias("i"), F.col("cv").alias("va")),
+            assignments.select("cid", F.col("nid").alias("j"), F.col("cv").alias("vb")),
+            "cid", ("i", "va"), ("j", "vb"), _pairs_at_least(threshold),
         )
     labels = duplicate_clusters(ids, pairs, max_iterations=max_iterations)
     return labels.select(
@@ -903,59 +820,44 @@ def semdedup_incremental(
     :func:`ivf_assign`, so the corpus is never re-clustered and the
     per-batch cost is |batch| x (posting lists of the touched
     clusters) — independent of total corpus size in all other
-    clusters. Replay-safe by construction: the corpus side drops the
-    batch's own ids first, so a micro-batch whose delta was already
-    appended (at-least-once foreachBatch) emits exactly its original
-    pairs instead of matching itself in the index; pairs are
-    ``distinct()`` (an output-sized relation), so duplicate posting
-    rows left by replayed appends of OTHER batches cannot multiply
-    output either — the index itself is never re-shuffled per batch
-    (fold its duplicates offline with the streaming module's
-    ``compact_semdedup_index``).
+    clusters: only the touched clusters' posting rows shuffle, and
+    each touched cluster is one kernel tile (the batch's rows against
+    the corpus's and the batch's own). Replay-safe by construction:
+    the corpus side drops the batch's own ids first, so a micro-batch
+    whose delta was already appended (at-least-once foreachBatch)
+    emits exactly its original pairs instead of matching itself in the
+    index; pairs are ``distinct()`` (an output-sized relation), so
+    duplicate posting rows left by replayed appends of OTHER batches
+    cannot multiply output either — the index itself is never
+    deduplicated per batch (fold its duplicates offline with the
+    streaming module's ``compact_semdedup_index``).
 
     ``materialize=True`` eagerly localCheckpoints the assignment so
-    the returned ``pairs`` (which reference it three times:
-    batch-vs-corpus, both sides of batch-vs-batch) and the ``delta``
-    append all read ONE computed pass — without it, each consumer
-    re-runs the centroid assignment (4 passes per micro-batch; with
-    >32 centroids that is 4 Arrow GEMM scans of the batch).
+    the returned ``pairs`` (which read it for the anti-join, the
+    touched-cluster list and both sides of the tiles) and the
+    ``delta`` append all read ONE computed pass — without it, each
+    consumer re-runs the centroid assignment (an Arrow GEMM scan of
+    the batch per read).
     """
     delta = ivf_assign(batch, centroids, corpus_id=id_col, vec_col=vec_col)
     if materialize:
         delta = delta.localCheckpoint(eager=True)
     batch_ids = delta.select(F.col("nid").alias("__bid"))
+    # only the touched clusters' posting rows go on to the tiles
     corpus = postings.join(
         batch_ids, postings.nid == batch_ids.__bid, "left_anti"
+    ).join(F.broadcast(delta.select("cid")), "cid", "left_semi")
+    # batch-vs-batch pairs are kept once (i < j) by the keep rule
+    candidates = corpus.select("cid", "nid", "cv").unionByName(
+        delta.select("cid", "nid", "cv")
     )
-    delta_n = delta.withColumn("__n", l2_norm(F.col("cv")))
-    corpus_n = corpus.withColumn("__n", l2_norm(F.col("cv")))
-    b_i = delta_n.select(
-        "cid", F.col("nid").alias("i"), F.col("cv").alias("va"),
-        F.col("__n").alias("na"),
-    )
-    c_j = corpus_n.select(
-        "cid", F.col("nid").alias("j"), F.col("cv").alias("vb"),
-        F.col("__n").alias("nb"),
-    )
-    b_j = delta_n.select(
-        "cid", F.col("nid").alias("j"), F.col("cv").alias("vb"),
-        F.col("__n").alias("nb"),
-    )
-    vs_corpus = b_i.join(c_j, "cid")
-    vs_batch = b_i.join(b_j, "cid").where(F.col("i") < F.col("j"))
     pairs = (
-        vs_corpus.unionByName(vs_batch)
-        .select(
-            "i",
-            "j",
-            F.round(
-                _staged_cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                round_score,
-            ).alias("score"),
+        _keyed_pairs(
+            delta.select("cid", F.col("nid").alias("i"), F.col("cv").alias("va")),
+            candidates.select("cid", F.col("nid").alias("j"), F.col("cv").alias("vb")),
+            "cid", ("i", "va"), ("j", "vb"), _pairs_at_least(threshold),
         )
-        .where(F.col("score") >= threshold)
+        .withColumn("score", F.round("score", round_score))
         .distinct()
     )
     return pairs, delta

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from iot_sensor_data_pipeline_spark.functions.text import STOPWORDS, text_features
 from iot_sensor_data_pipeline_spark.operators.dedup import (
@@ -23,7 +24,11 @@ from iot_sensor_data_pipeline_spark.operators.dedup import (
     simhash,
     simhash_near_pairs,
 )
-from iot_sensor_data_pipeline_spark.operators.similarity import cosine_topk, rp_lsh_topk
+from iot_sensor_data_pipeline_spark.operators.similarity import (
+    _l2_kernel,
+    cosine_topk,
+    rp_lsh_topk,
+)
 from iot_sensor_data_pipeline_spark.plans.registry import register, register_extended
 from iot_sensor_data_pipeline_spark.sources.tables import load_table
 
@@ -424,8 +429,9 @@ SELECT qid, nid, score, rn FROM ranked WHERE rn <= 10
 
 @register("embeddings_knn_brute_force", oracle=_KNN_ORACLE, tags=("pipeline", "similarity"), bench=True)
 def embeddings_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-10 for every 100th vector as query set —
-    broadcast queries x full corpus scan, JVM fold for the dot product."""
+    """Exact cosine top-10 for every 100th vector as query set: the
+    driver-collected query matrix scores each corpus partition where
+    it is read (operators/similarity.cosine_topk)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return cosine_topk(queries, emb, k=10)
@@ -478,19 +484,6 @@ def embeddings_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFram
     return cosine_near_dup_pairs(emb, threshold=0.4, n_planes=6, dim=64)
 
 
-def embeddings_knn_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow+BLAS brute force (mapInPandas GEMM per corpus partition) —
-    the large-query-set path; equality with the JVM fold variant pinned
-    in tests/test_similarity.py (rows-only: normalized-matrix op
-    order can differ from the oracle's fold in the 6th decimal).
-    Registered through embeddings_ann_variants."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import cosine_topk_gemm
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    return cosine_topk_gemm(queries, emb, k=10)
-
-
 def embeddings_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (k-means coarse quantizer + probe-and-rerank); recall vs
     brute force asserted in tests/test_similarity.py.
@@ -502,6 +495,19 @@ def embeddings_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(queries, emb, k=10, n_centroids=16, n_probe=4)
 
 
+def _unit_embeddings(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding) with each embedding scaled to unit L2 norm;
+    the norm is the cosine kernel's (operators/similarity._l2_kernel),
+    computed once per row."""
+    l2 = pandas_udf(_l2_kernel, "double")
+    return emb.withColumn("__n", l2(F.col("embedding"))).select(
+        "vec_id",
+        F.transform(
+            F.col("embedding"), lambda x: x.cast("double") / F.col("__n")
+        ).alias("embedding"),
+    )
+
+
 @register("embeddings_ann_variants", oracle=None, tags=("pipeline", "similarity", "udf"))
 def embeddings_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every approximate / accelerated similarity path in one tagged
@@ -509,7 +515,8 @@ def embeddings_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - lsh          — RP-LSH bucketed top-k (qid, nid, score, rn)
     - ivf          — IVF probe-and-rerank top-k
-    - gemm         — Arrow+BLAS mapInPandas exact top-k
+    - gemm         — the exact top-k of embeddings_knn_brute_force
+                     (the name is kept from the retired BLAS path)
     - near_dup_lsh — LSH-bucketed cosine near-dup pairs (i -> qid,
                      j -> nid, rn null)
     - pq           — product-quantization ADC shortlist + exact
@@ -536,19 +543,9 @@ def embeddings_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk,
         pq_train,
     )
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        ivf_build,
-        l2_norm,
-    )
+    from iot_sensor_data_pipeline_spark.operators.similarity import ivf_build
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    unit = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: x.cast("double") / l2_norm(F.col("embedding")),
-        ).alias("embedding"),
-    )
+    unit = _unit_embeddings(load_table(spark, sf_dir, "embeddings"))
     books = pq_train(unit, m=4, k=64, sample_rows=5000, iters=8)
     codes = pq_encode(unit, books)
     pq = pq_topk(
@@ -578,7 +575,7 @@ def embeddings_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         embeddings_knn_ivf(spark, sf_dir).select(
             F.lit("ivf").alias("method"), "qid", "nid", "score", F.col("rn").cast("long")
         ),
-        embeddings_knn_gemm(spark, sf_dir).select(
+        embeddings_knn_brute_force(spark, sf_dir).select(
             F.lit("gemm").alias("method"), "qid", "nid", "score", F.col("rn").cast("long")
         ),
         embeddings_cosine_near_dup_lsh(spark, sf_dir).select(
@@ -618,49 +615,11 @@ FROM embeddings
 """
 
 
-def _l2_kernel(v):  # pd.Series -> pd.Series; hints omitted — inference
-    # rejects the stringized hints `from __future__ import
-    # annotations` produces, so the Series contract lives here.
-    # Fully vectorized over the Arrow batch. The oracle's
-    # list_dot_product sums LEFT TO RIGHT, so the kernel must too
-    # (np.sum/np.dot use pairwise blocking that drifts in the last
-    # ulp). Fixed-dim batch (the embedding-table case): reshape to
-    # (n, dim) and row-wise cumsum — per-row sequential order,
-    # zero Python per row. Ragged fallback: np.add.reduceat's
-    # simple per-segment loop (also sequential, fresh per segment).
-    import numpy as np
-    import pandas as pd
-
-    if len(v) == 0:
-        return pd.Series(np.zeros(0))
-    lens = v.map(len).to_numpy(dtype="int64")
-    flat = np.concatenate([np.asarray(x, dtype="float64") for x in v])
-    sq = np.square(flat)
-    if sq.size == 0:
-        sums = np.zeros(len(v))
-    elif lens.min() == lens.max():
-        sums = np.cumsum(sq.reshape(len(v), lens[0]), axis=1)[:, -1]
-    else:
-        # zero-length segments: pad sq with one trailing 0.0 so every
-        # raw offset (max = sum(lens)) is in range — clamping instead
-        # would fold a trailing empty segment's boundary into the
-        # previous segment and truncate its sum. reduceat returns
-        # sq[offset] for equal successive offsets — masked by the where.
-        offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        padded = np.append(sq, 0.0)
-        sums = np.where(lens > 0, np.add.reduceat(padded, offsets), 0.0)
-    return pd.Series(np.sqrt(sums))
-
-
 @register("embeddings_l2_norm_pandas_udf", oracle=_NORM_ORACLE, tags=("pipeline", "udf"))
 def embeddings_l2_norm_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow-vectorized UDF path, oracle-checked: numpy L2 norms
-    over Arrow batches (kernel: _l2_kernel, ragged-batch-safe — see
-    tests/test_similarity.py). Exists to pin the pandas_udf plumbing —
-    for a pure norm the built-in fold (operators/similarity.l2_norm) is
-    the better plan (no Python at all)."""
-    from pyspark.sql.functions import pandas_udf
-
+    over Arrow batches (operators/similarity._l2_kernel, the cosine
+    kernel's norm, ragged-batch-safe — see tests/test_similarity.py)."""
     l2 = pandas_udf(_l2_kernel, "double")
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1062,19 +1021,9 @@ def embeddings_ivfpq_blocked_bench(spark: SparkSession, sf_dir: str) -> DataFram
         pq_encode,
         pq_train,
     )
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        ivf_build,
-        l2_norm,
-    )
+    from iot_sensor_data_pipeline_spark.operators.similarity import ivf_build
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    unit = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: x.cast("double") / l2_norm(F.col("embedding")),
-        ).alias("embedding"),
-    )
+    unit = _unit_embeddings(load_table(spark, sf_dir, "embeddings"))
     unit = unit.localCheckpoint(eager=False)  # 4 consumers below
     books = pq_train(unit, m=4, k=64, sample_rows=5000, iters=4)
     codes = pq_encode(unit, books)

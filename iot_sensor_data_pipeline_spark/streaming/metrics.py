@@ -1,6 +1,7 @@
 """Streaming observability: a StreamingQueryListener collecting per-
-batch progress (rows/sec, batch duration, state size) into memory and
-optionally a JSON-lines file.
+batch progress (rows/sec, trigger duration and its phases, state
+operators, observed metrics) into memory and optionally a JSON-lines
+file.
 
 The reference's only observability is print() per batch (reference
 data_persistance.py:42,55 and siblings, SURVEY.md §2.5 K6); this is
@@ -22,7 +23,15 @@ class BatchMetric:
     num_input_rows: int
     input_rows_per_second: float
     process_rows_per_second: float
+    #: the trigger's wall time, ``durationMs["triggerExecution"]`` — it
+    #: spans every other phase, so the phases are never summed into it
     duration_ms: int
+    #: per-phase durations: addBatch, queryPlanning, walCommit, ...
+    phases_ms: dict[str, int] = field(default_factory=dict)
+    #: one dict per stateful operator (rows total/updated, memory, ...)
+    state_operators: list[dict] = field(default_factory=list)
+    #: ``Dataset.observe`` metrics by name (see with_quality_metrics)
+    observed_metrics: dict[str, dict] = field(default_factory=dict)
 
 
 @dataclass
@@ -37,6 +46,10 @@ class MetricsCollector(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
+        # the progress JSON renders state operators and observed rows
+        # as plain objects, ready for the JSONL dump
+        full = json.loads(p.json)
+        phases = full.get("durationMs", {})
         metric = BatchMetric(
             # p.id is a uuid.UUID in PySpark 4 — stringify or the JSONL
             # dump raises (and Spark swallows listener exceptions)
@@ -45,7 +58,10 @@ class MetricsCollector(StreamingQueryListener):
             num_input_rows=p.numInputRows,
             input_rows_per_second=p.inputRowsPerSecond or 0.0,
             process_rows_per_second=p.processedRowsPerSecond or 0.0,
-            duration_ms=sum(v for v in p.durationMs.values()),
+            duration_ms=phases.get("triggerExecution", 0),
+            phases_ms=phases,
+            state_operators=full.get("stateOperators", []),
+            observed_metrics=full.get("observedMetrics", {}),
         )
         self.batches.append(metric)
         if self.jsonl_path:

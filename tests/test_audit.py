@@ -83,17 +83,10 @@ def test_bnlj_warns_by_default_blocks_when_strict(spark):
 def test_engine_headline_queries_have_no_blocking_findings(spark):
     """The auditor agrees with the suite's own plan pins: every benched
     registry query audits clean."""
-    # documented exception: brute-force kNN broadcasts the driver-small
-    # query set and cross-scores it against the corpus scan — a BNLJ by
-    # design, with the build side bounded by the broadcast threshold
-    # (plan pinned in test_plans.test_knn_broadcasts_queries_not_corpus)
-    sanctioned_bnlj = {"embeddings_knn_brute_force"}
     for name, q in REGISTRY.items():
         if not q.bench:
             continue
         f = blocking(audit_plan(q.fn(spark, SF)))
-        if name in sanctioned_bnlj:
-            f = [x for x in f if x.rule != "broadcast-nested-loop"]
         assert not f, (name, f)
 
 
@@ -120,17 +113,8 @@ def test_extended_registry_queries_have_no_blocking_findings(spark):
     block. ``extended`` tier: whole-non-gate-registry plan sweep."""
     from iot_sensor_data_pipeline_spark.plans import EXTENDED_REGISTRY
 
-    # same documented exception as the gate's brute-force kNN: these
-    # queries score an exact cosine_topk ranking, whose
-    # broadcast-queries x corpus-scan cross-score is a BNLJ by design
-    # (build side = the driver-small query set). documents_hybrid_rrf
-    # (r13) fuses that exact dense ranking with BM25 via RRF — its
-    # lexical half and the fusion itself audit clean.
-    sanctioned_bnlj = {"embeddings_ranking_metrics", "documents_hybrid_rrf"}
     for name, q in EXTENDED_REGISTRY.items():
         f = blocking(audit_plan(q.fn(spark, SF)))
-        if name in sanctioned_bnlj:
-            f = [x for x in f if x.rule != "broadcast-nested-loop"]
         assert not f, (name, f)
 
 

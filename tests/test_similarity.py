@@ -1,25 +1,122 @@
 """Similarity search: brute-force vs DuckDB is covered by the oracle
-tests; here LSH recall vs brute force, and vector-math primitives."""
+tests; here LSH recall vs brute force, and the cosine kernel."""
 
 from __future__ import annotations
 
+import math
+import random
+
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.operators.similarity import (
-    cosine,
+    cosine_near_dup_pairs,
+    cosine_tile,
     cosine_topk,
     rp_lsh_topk,
 )
 from iot_sensor_data_pipeline_spark.sources.tables import load_table
 
 
-def test_cosine_primitive(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0]), ([1.0, 0.0], [-1.0, 0.0])],
-        "a array<double>, b array<double>",
+def _sequential_cosine(a, b):
+    """Pure-Python cosine in the SQL fold's order: every sum runs left
+    to right from 0.0, and the score is dot / (|a| * |b|)."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot = dot + x * y
+    for x in a:
+        na = na + x * x
+    for y in b:
+        nb = nb + y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def test_cosine_primitive():
+    """The kernel is bit-identical (==, not approx) to the left-to-right
+    reference, on random vectors and on cancellation-heavy ones where
+    any other summation order moves the low bits."""
+    rnd = random.Random(5)
+    rand = [[rnd.gauss(0, 1) for _ in range(64)] for _ in range(40)]
+    # large terms of both signs that cancel down to small sums
+    cancel = [
+        [rnd.choice((1, -1)) * 10.0 ** rnd.randint(-3, 8) * rnd.random() for _ in range(33)]
+        for _ in range(40)
+    ]
+    for vecs in (rand, cancel):
+        A, B = vecs[:15], vecs[15:]
+        S = cosine_tile(np.array(A), np.array(B), np.arange(15), np.arange(25))
+        want = [[_sequential_cosine(a, b) for b in B] for a in A]
+        assert S.tolist() == want
+    S = cosine_tile(
+        np.array([[1.0, 0.0], [1.0, 1.0], [1.0, 0.0]]),
+        np.array([[0.0, 1.0], [1.0, 1.0], [-1.0, 0.0]]),
+        np.arange(3),
+        np.arange(3),
     )
-    got = [round(r.c, 9) for r in df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()]
-    assert got == [0.0, 1.0, -1.0]
+    assert [round(S[i, i], 9) for i in range(3)] == [0.0, 1.0, -1.0]
+
+
+def test_zero_norm_vector_raises_naming_its_id(spark):
+    """A zero vector has no cosine. Scoring it raises and names the id,
+    on both sides of a tile, instead of emitting NaN (which would sort
+    above every score and become every query's top neighbour)."""
+    with pytest.raises(ValueError, match="zero-norm vector, id 7"):
+        cosine_tile(np.ones((2, 3)), np.array([[1.0, 2.0, 3.0], [0.0, 0.0, 0.0]]),
+                    np.array([1, 2]), np.array([6, 7]))
+    with pytest.raises(ValueError, match="zero-norm vector, id 3"):
+        cosine_tile(np.array([[0.0, 0.0]]), np.ones((1, 2)), np.array([3]), np.array([4]))
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (7, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="zero-norm vector, id 7"):
+        cosine_topk(df.where("vec_id = 1"), df, k=2).collect()
+    with pytest.raises(Exception, match="zero-norm vector, id 7"):
+        cosine_near_dup_pairs(df, 0.5).collect()
+
+
+def _near_threshold_pair(cos):
+    """Two 2-dim vectors whose computed cosine is ``cos`` to ~1e-16."""
+    return [1.0, 0.0], [cos, math.sqrt(1.0 - cos * cos)]
+
+
+def test_threshold_compares_the_unrounded_cosine(spark):
+    """A pair whose cosine lies in [0.3999995, 0.4) rounds to 0.4 at 6
+    places but is below a 0.4 threshold. The oracles threshold the
+    unrounded cosine, so every pair operator must drop it; a pair just
+    above 0.4 stays, with its score rounded."""
+    from iot_sensor_data_pipeline_spark.operators.similarity import (
+        ivf_build,
+        semantic_dedup,
+        semdedup_incremental,
+    )
+
+    below_a, below_b = _near_threshold_pair(0.3999997)
+    above_a, above_b = _near_threshold_pair(0.4000003)
+    assert 0.3999995 <= _sequential_cosine(below_a, below_b) < 0.4
+    rows = [(1, below_a), (2, below_b), (11, [-x for x in above_a]),
+            (12, [-x for x in above_b])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    exact = {(r.i, r.j): r.score for r in cosine_near_dup_pairs(df, 0.4).collect()}
+    assert exact == {(11, 12): 0.4}
+    # one plane, multi-probed: every pair is an LSH candidate
+    lsh = cosine_near_dup_pairs(df, 0.4, n_planes=1, n_tables=1, dim=2)
+    assert {(r.i, r.j): r.score for r in lsh.collect()} == {(11, 12): 0.4}
+
+    kept = {r.id: r.kept for r in semantic_dedup(df, threshold=0.4).collect()}
+    assert kept == {1: 1, 2: 1, 11: 1, 12: 0}
+    clustered = {
+        r.id: r.kept for r in semantic_dedup(df, threshold=0.4, n_clusters=2).collect()
+    }
+    assert clustered == kept
+
+    postings, centroids = ivf_build(df.where("vec_id IN (1, 11)"), n_centroids=2)
+    pairs, _ = semdedup_incremental(
+        df.where("vec_id IN (2, 12)"), postings, centroids, 0.4
+    )
+    assert {(r.i, r.j, r.score) for r in pairs.collect()} == {(12, 11, 0.4)}
 
 
 def test_lsh_recall_vs_brute_force_isotropic_worst_case(spark, sf_dir_mid):
@@ -269,19 +366,6 @@ def test_rp_lsh_build_probe_matches_fused_and_bucketed_plan(spark, sf_dir_mid):
         spark.sql("DROP TABLE IF EXISTS b_lsh_buckets")
 
 
-def test_gemm_topk_matches_fold_topk(spark, sf_dir_mid):
-    from iot_sensor_data_pipeline_spark.operators.similarity import cosine_topk_gemm
-
-    emb = load_table(spark, sf_dir_mid, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    fold = cosine_topk(queries, emb, k=10)
-    gemm = cosine_topk_gemm(queries, emb, k=10)
-    f = {(r.qid, r.nid): r.score for r in fold.collect()}
-    g = {(r.qid, r.nid): r.score for r in gemm.collect()}
-    assert set(f) == set(g)  # identical neighbor sets + ranking survivors
-    assert all(abs(f[p] - g[p]) < 1e-5 for p in f)  # scores agree to rounding
-
-
 def test_l2_kernel_ragged_batches():
     """The pandas-UDF L2 kernel must be exact on ragged Arrow batches,
     including zero-length vectors in every position (the trailing-empty
@@ -290,7 +374,7 @@ def test_l2_kernel_ragged_batches():
 
     import pandas as pd
 
-    from iot_sensor_data_pipeline_spark.plans.queries_pipeline import _l2_kernel
+    from iot_sensor_data_pipeline_spark.operators.similarity import _l2_kernel
 
     cases = [
         ([[3.0, 4.0], []], [5.0, 0.0]),  # trailing empty — the repro
@@ -355,52 +439,72 @@ def test_ivf_small_and_large_paths_agree_on_exhaustive_probe(spark, sf_dir_mid):
     assert large == e
 
 
-def test_cosine_topk_blocked_equals_brute_force(spark, sf_dir_mid):
-    """Blocked GEMM (big-queries x big-corpus regime) must equal the
-    broadcast brute-force baseline exactly — same scores, same
-    tie-break — for several block geometries, including blocks that
-    don't divide the data evenly and a 1x1 grid (degenerate = one
-    tile)."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blocked,
-    )
-    from iot_sensor_data_pipeline_spark.sources.tables import load_table
+def _round6(x):
+    """Spark's F.round(x, 6): HALF_UP on the double's decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    emb = load_table(spark, sf_dir_mid, "embeddings")
-    queries = emb.where(F.col("vec_id") % 10 == 0)  # all-pairs-ish: 10% of corpus
-
-    want = {
-        (r.qid, r.rn): (r.nid, r.score)
-        for r in cosine_topk(queries, emb, k=5).collect()
-    }
-    for qb, cb in ((1, 1), (3, 4), (8, 8)):
-        got = {
-            (r.qid, r.rn): (r.nid, r.score)
-            for r in cosine_topk_blocked(
-                queries, emb, k=5, q_blocks=qb, c_blocks=cb
-            ).collect()
-        }
-        assert got == want, f"mismatch at blocks ({qb},{cb})"
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
 
-def test_cosine_topk_blocked_edge_cases(spark):
-    """k exceeding the corpus, single-row sides, and empty tiles (more
-    blocks than rows) must all match the broadcast baseline."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blocked,
-    )
+def _reference_topk(corpus, queries, k):
+    """(qid, nid, score, rn) by rounded score desc, then nid."""
+    out = set()
+    for qid, qv in queries:
+        cands = sorted(
+            (-_round6(_sequential_cosine(qv, v)), nid) for nid, v in corpus if nid != qid
+        )
+        out |= {(qid, nid, -s, rn) for rn, (s, nid) in enumerate(cands[:k], 1)}
+    return out
 
+
+def test_cosine_topk_edge_cases(spark):
+    """k above the corpus size, single-row sides, more partitions than
+    rows, and rounded-score ties whose raw order is the reverse of the
+    nid tie-break: a batch-local cut on raw scores alone would keep the
+    wrong tied rows."""
     rows = [(i, [float(i + 1), float((i * 7) % 5 + 1), 1.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    want = sorted(
-        map(tuple, cosine_topk(df, df, k=10).collect())
-    )  # k > |corpus|-1
-    got = sorted(
-        map(tuple, cosine_topk_blocked(df, df, k=10, q_blocks=4, c_blocks=8).collect())
-    )
-    assert got == want
+
+    def got(q, c, k):
+        return set(map(tuple, cosine_topk(q, c, k=k).collect()))
+
+    assert got(df, df, 10) == _reference_topk(rows, rows, 10)  # k > |corpus|-1
+    assert got(df.where("vec_id = 0"), df, 3) == _reference_topk(rows, rows[:1], 3)
+    assert got(df, df.where("vec_id = 1"), 3) == _reference_topk(rows[1:2], rows, 3)
+    assert got(df, df.repartition(8), 4) == _reference_topk(rows, rows, 4)
+    assert got(df.where("vec_id < 0"), df, 3) == set()
+
+    # cos = 1 - 1e-9 * (12 - i): every score rounds to 1.0, and the
+    # raw order runs opposite to the nid order the rank window uses
+    q = [(0, [1.0, 0.0, 0.0])]
+    near = [(100 + i, [1.0, math.sqrt(2e-9 * (12 - i)), 0.0]) for i in range(12)]
+    far = [(200 + i, [1.0, 1.0 + i, 0.0]) for i in range(4)]
+    corpus = spark.createDataFrame(near + far + q, "vec_id long, embedding array<double>")
+    for c in (corpus.coalesce(1), corpus.repartition(3)):
+        top = got(c.where("vec_id = 0"), c, 5)
+        assert top == {(0, 100 + i, 1.0, i + 1) for i in range(5)}
+        assert top == _reference_topk(near + far, q, 5)
+
+
+def test_exact_near_dup_tiles_edge_cases(spark):
+    """The exact all-pairs path scores the upper triangle of hash-block
+    tiles: each pair exactly once whatever the block count, including
+    more blocks than rows (empty tiles) and a single row (no pairs)."""
+    rnd = random.Random(3)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(40)]
+    want = {
+        (a, b): _round6(_sequential_cosine(va, vb))
+        for a, va in rows
+        for b, vb in rows
+        if a < b and _sequential_cosine(va, vb) >= 0.3
+    }
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = cosine_near_dup_pairs(df.repartition(5), 0.3).collect()
+    assert len(out) == len(want)
+    assert {(r.i, r.j): r.score for r in out} == want
+    three = df.where("vec_id < 3")
+    assert cosine_near_dup_pairs(three, -1.0).count() == 3
+    assert cosine_near_dup_pairs(df.where("vec_id = 0"), -1.0).count() == 0
 
 
 # ---------------------------------------------------------------------------
